@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.dedup.{DedupPipeline, TrianglePipeline}
+import graft.dedup.DedupStrategy
 import graft.ml.{DedupMl, Febrl}
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,6 +14,8 @@ import org.apache.spark.sql.types._
   *
   *   runMain graft.cli.GenerateLabeledPoints --input data/train.csv \
   *     --output /tmp/pairs [--reducers 49] [--unlabeled]
+  *     (`--reducers` sets k for the triangle plan; the strategy chooser,
+  *     not a flag, picks which plan runs)
   *   runMain graft.cli.TrainDupClassifier --input /tmp/pairs --model /tmp/m \
   *     [--maxIter 100]
   *   runMain graft.cli.ApplyDupClassifier --input /tmp/pairs2 --model /tmp/m \
@@ -89,8 +91,9 @@ object Cli {
 }
 
 /** Job 1 — blocking + exactly-once pair comparison (the flagship).
-  * `--reducers k` selects the triangle physical strategy; without it the
-  * declarative self-join plan (AQE skew handling) runs. */
+  * `--reducers k` sets the triangle plan's reducer count k (default: the
+  * session's defaultParallelism); which physical plan runs is picked from
+  * the input by [[graft.dedup.DedupStrategy]], never by a flag. */
 object GenerateLabeledPoints {
   def main(args: Array[String]): Unit = {
     val a = Cli.parse(args)
@@ -98,17 +101,14 @@ object GenerateLabeledPoints {
     val cfg0 = Febrl.config
     val cfg = if (a.contains("unlabeled")) cfg0.copy(label = None) else cfg0
     val df = Febrl.read(spark, a("input"))
-    val pairs = a.get("reducers").map { s =>
-      s.toIntOption.getOrElse(
+    val k = a.get("reducers").fold(spark.sparkContext.defaultParallelism) { s =>
+      val k = s.toIntOption.getOrElse(
         throw new IllegalArgumentException(s"--reducers must be an integer, got '$s'"))
-    } match {
-      // k = 1 is a valid (degenerate) triangle layout — the planner handles
-      // it, and silently ignoring the flag would surprise reference users
-      case Some(k) if k >= 1 => TrianglePipeline.pairFeatures(df, cfg, k)
-      case Some(k) =>
-        throw new IllegalArgumentException(s"--reducers must be >= 1, got $k")
-      case None => DedupPipeline.pairFeatures(df, cfg)
+      // k = 1 is a valid (degenerate) triangle layout — the planner handles it
+      if (k < 1) throw new IllegalArgumentException(s"--reducers must be >= 1, got $k")
+      k
     }
+    val pairs = DedupStrategy.pairFeaturesAuto(df, cfg, k)
     val labelCol = if (cfg.label.isDefined) Seq(col("label").cast("string"))
                    else Seq(lit("").as("label"))
     pairs

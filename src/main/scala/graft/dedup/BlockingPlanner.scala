@@ -57,15 +57,15 @@ object BlockingPlanner {
       s.keys.zipWithIndex.map { case (k, i) =>
         records.select(col(idColumn).as("rid"), lit(s.name).as("scheme"),
           lit(i + 1).as("ordinal"),
-          coalesce(trim(k.cast("string")), lit("")).as("kb"))
+          DedupPipeline.keyValue(k).as("kb"))
       }.reduce(_ union _)
     }.reduce(_ union _)
     val keys = graft.CachedFrames.track(keyed)
     val blocks = keys.groupBy(col("scheme"), col("ordinal"), col("kb"))
-      .agg(count(lit(1)).as("c"))
+      .agg(count(lit(1)).as("n"))
       .groupBy(col("scheme"))
       .agg(count(lit(1)).as("n_blocks"),
-        coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)).as("cand_pairs"))
+        coalesce(sum(DedupPipeline.blockPairs), lit(0L)).as("cand_pairs"))
     val nTruth = truthC.count()
     val cover = truthC
       .join(keys.select(col("rid").as("id1"), col("scheme"),

@@ -11,13 +11,15 @@ import org.apache.spark.sql.functions._
   * sharing a key, compare each pair exactly once (in its lowest-ordinal shared
   * block), and project per-column similarity features.
   *
-  * This file is the declarative formulation — an inverted-index self-join that
-  * Catalyst plans with whole-stage codegen, partial aggregation and AQE skew
+  * This file holds the block model every physical plan shares — the
+  * normalised key value, the (k, v) explode, the per-block workload — and
+  * the declarative formulation: an inverted-index self-join that Catalyst
+  * plans with whole-stage codegen, partial aggregation and AQE skew
   * handling. At 100 TB this is the standard scalable candidate-generation
   * shape: the shuffle keys are (k, v) for the join and (id1, id2) for the
   * exactly-once dedup, both well-distributed unless one block dominates — in
-  * which case [[TrianglePipeline]] (the reference's skew-aware physical
-  * strategy) is the opt-in alternative.
+  * which case [[DedupStrategy]] picks [[TrianglePipeline]] (the reference's
+  * skew-aware physical strategy) instead.
   */
 object DedupPipeline {
 
@@ -36,20 +38,36 @@ object DedupPipeline {
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** (id, k, v) inverted index: one row per tuple per blocking key.
-    * Reference: `Util.getBKVs` (Util.scala:45-58) — null key value ⇒ "".
-    */
-  def blockIndex(df: DataFrame, cfg: DedupConfig): DataFrame = {
-    val bkvs = array(cfg.blockingKeys.zipWithIndex.map { case (c, i) =>
-      struct(lit(i + 1).as("k"), coalesce(trim(c.cast("string")), lit("")).as("v"))
-    }: _*)
-    df.select(col(cfg.idColumn).as("id"), explode(bkvs).as("bkv"))
-      .select(col("id"), col("bkv.k").as("k"), col("bkv.v").as("v"))
-  }
+  /** A tuple's block key value under one blocking function.
+    * Reference: `Util.getBKVs` (Util.scala:45-58) — null key value ⇒ "". */
+  private[dedup] def keyValue(key: Column): Column =
+    coalesce(trim(key.cast("string")), lit(""))
 
-  /** Candidate pairs (id1 < id2) sharing at least one blocking key, tagged
-    * with the lowest shared ordinal `bk` — each pair EXACTLY ONCE even when
-    * it co-occurs in blocks of several blocking functions.
+  /** `bv0..bv(n-1)`: the tuple's key value under each blocking function. */
+  private[dedup] def keyColumns(cfg: DedupConfig): Seq[Column] =
+    cfg.blockingKeys.zipWithIndex.map { case (c, i) => keyValue(c).as(s"bv$i") }
+
+  /** One `bkv` struct (k = 1-based ordinal, v = key value) per blocking
+    * function, exploded from the `bv$i` columns. */
+  private def explodeKeys(cfg: DedupConfig): Column =
+    explode(array(cfg.blockingKeys.indices.map(i =>
+      struct(lit(i + 1).as("k"), col(s"bv$i").as("v"))): _*)).as("bkv")
+
+  /** n(n−1)/2 over a block's tuple-count column `n`: the pairs the block
+    * compares, its Dis-Dedup workload. */
+  private[dedup] def blockPairs: Column = expr("n * (n - 1) DIV 2")
+
+  /** (k, v, n, w): every block's tuple count `n` and workload `w`. */
+  private[dedup] def blockWork(df: DataFrame, cfg: DedupConfig): DataFrame =
+    df.select(keyColumns(cfg): _*)
+      .select(explodeKeys(cfg))
+      .groupBy(col("bkv.k").as("k"), col("bkv.v").as("v"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("w", blockPairs)
+
+  /** The exactly-once block self-join: index rows `a` and `b` (aliases)
+    * carrying `id`, `k`, the `bv$i` key values and `carry`, one row per pair
+    * (a.id < b.id) in its lowest shared block only.
     *
     * Exactly-once uses the reference's own guard (`Compare.scala:94,106` +
     * `Util.lowestCommonBlockNum`) rather than a groupBy(id1, id2)
@@ -66,50 +84,46 @@ object DedupPipeline {
     * skewed blocks); the guard is O(#blockingFns) codegen'd comparisons
     * per candidate.
     */
-  def candidatePairs(df: DataFrame, cfg: DedupConfig): DataFrame = {
-    val n = cfg.blockingKeys.size
-    val keyCols = cfg.blockingKeys.zipWithIndex.map { case (c, i) =>
-      coalesce(trim(c.cast("string")), lit("")).as(s"bv$i")
-    }
-    val bkvs = array((0 until n).map(i =>
-      struct(lit(i + 1).as("k"), col(s"bv$i").as("v"))): _*)
+  private def blockJoin(df: DataFrame, cfg: DedupConfig, carry: Seq[String]): DataFrame = {
     val idx = parallelize(df)
-      .select(col(cfg.idColumn).as("id") +: keyCols: _*)
-      .select(col("id") +: (0 until n).map(i => col(s"bv$i")) :+
-        explode(bkvs).as("bkv"): _*)
-      .select(col("id") +: (0 until n).map(i => col(s"bv$i")) :+
-        col("bkv.k").as("k") :+ col("bkv.v").as("v"): _*)
+      .select(col(cfg.idColumn).as("id") +: (keyColumns(cfg) ++ carry.map(col)): _*)
+      .select(col("*"), explodeKeys(cfg))
+      .select(col("*"), col("bkv.k").as("k"), col("bkv.v").as("v"))
+      .drop("bkv")
     val a = idx.alias("a")
     val b = idx.alias("b")
     // lowest shared ordinal: first i (1-based) whose key values agree
-    val lcb = (0 until n).foldRight(lit(Int.MaxValue)) { case (i, rest) =>
+    val lcb = cfg.blockingKeys.indices.foldRight(lit(Int.MaxValue)) { case (i, rest) =>
       when(col(s"a.bv$i") === col(s"b.bv$i"), lit(i + 1)).otherwise(rest)
     }
     a.join(b,
         col("a.k") === col("b.k") && col("a.v") === col("b.v") &&
           col("a.id") < col("b.id"))
       .filter(col("a.k") === lcb)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"), col("a.k").as("bk"))
   }
 
+  /** Candidate pairs (id1 < id2) sharing at least one blocking key, tagged
+    * with the lowest shared ordinal `bk` — each pair EXACTLY ONCE even when
+    * it co-occurs in blocks of several blocking functions. */
+  def candidatePairs(df: DataFrame, cfg: DedupConfig): DataFrame =
+    blockJoin(df, cfg, Nil)
+      .select(col("a.id").as("id1"), col("b.id").as("id2"), col("a.k").as("bk"))
+
+  /** Label (if configured) + similarity features of a pair whose two
+    * tuples are aliased `l` and `r`, identified by their `id` column. */
+  private def pairColumns(cfg: DedupConfig, l: String, r: String, id: String): Seq[Column] =
+    cfg.label.toSeq.map(fn => fn(col(s"$l.$id"), col(s"$r.$id")).as("label")) ++
+      cfg.features.map(f => f.cmp(col(s"$l.${f.column}"), col(s"$r.${f.column}")).as(f.name))
+
   /** Join a pair list (id1, id2) back to the source tuples and project the
-    * similarity features (+ optional ground-truth label). Shared by the naive
-    * and triangle physical variants so feature semantics are defined once.
-    */
-  def featuresFor(df: DataFrame, cfg: DedupConfig, pairs: DataFrame): DataFrame = {
-    val t1 = df.alias("t1")
-    val t2 = df.alias("t2")
-    val id1 = col("t1." + cfg.idColumn)
-    val id2 = col("t2." + cfg.idColumn)
-    val featCols: Seq[Column] = cfg.features.map { f =>
-      f.cmp(col("t1." + f.column), col("t2." + f.column)).as(f.name)
-    }
-    val labelCols: Seq[Column] = cfg.label.toSeq.map(fn => fn(id1, id2).as("label"))
+    * similarity features (+ optional ground-truth label). Used by the
+    * triangle plan and by callers holding a pair list of their own. */
+  def featuresFor(df: DataFrame, cfg: DedupConfig, pairs: DataFrame): DataFrame =
     pairs
-      .join(t1, pairs("id1") === id1)
-      .join(t2, pairs("id2") === id2)
-      .select((Seq(pairs("id1"), pairs("id2")) ++ labelCols ++ featCols): _*)
-  }
+      .join(df.alias("t1"), pairs("id1") === col("t1." + cfg.idColumn))
+      .join(df.alias("t2"), pairs("id2") === col("t2." + cfg.idColumn))
+      .select(Seq(pairs("id1"), pairs("id2")) ++
+        pairColumns(cfg, "t1", "t2", cfg.idColumn): _*)
 
   /** End-to-end: blocking → exactly-once candidate pairs → feature projection.
     * Equivalent to one full run of the reference's flagship job, minus the
@@ -121,34 +135,8 @@ object DedupPipeline {
     * that removes two full-table shuffle joins; the cost is a modestly
     * wider payload in the one block shuffle.
     */
-  def pairFeatures(df: DataFrame, cfg: DedupConfig): DataFrame = {
-    val n = cfg.blockingKeys.size
-    val featInputs = cfg.features.map(_.column).distinct
-    val keyCols = cfg.blockingKeys.zipWithIndex.map { case (c, i) =>
-      coalesce(trim(c.cast("string")), lit("")).as(s"bv$i")
-    }
-    val bkvs = array((0 until n).map(i =>
-      struct(lit(i + 1).as("k"), col(s"bv$i").as("v"))): _*)
-    val idx = parallelize(df)
-      .select(col(cfg.idColumn).as("id") +: (keyCols ++ featInputs.map(col)): _*)
-      .withColumn("bkv", explode(bkvs))
-      .withColumn("k", col("bkv.k"))
-      .withColumn("v", col("bkv.v"))
-      .drop("bkv")
-    val a = idx.alias("a")
-    val b = idx.alias("b")
-    val lcb = (0 until n).foldRight(lit(Int.MaxValue)) { case (i, rest) =>
-      when(col(s"a.bv$i") === col(s"b.bv$i"), lit(i + 1)).otherwise(rest)
-    }
-    val featCols = cfg.features.map { f =>
-      f.cmp(col("a." + f.column), col("b." + f.column)).as(f.name)
-    }
-    val labelCols = cfg.label.toSeq.map(fn => fn(col("a.id"), col("b.id")).as("label"))
-    a.join(b,
-        col("a.k") === col("b.k") && col("a.v") === col("b.v") &&
-          col("a.id") < col("b.id"))
-      .filter(col("a.k") === lcb)
-      .select((Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++
-        labelCols ++ featCols): _*)
-  }
+  def pairFeatures(df: DataFrame, cfg: DedupConfig): DataFrame =
+    blockJoin(df, cfg, cfg.features.map(_.column).distinct)
+      .select(Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++
+        pairColumns(cfg, "a", "b", "id"): _*)
 }

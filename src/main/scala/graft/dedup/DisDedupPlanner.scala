@@ -21,9 +21,8 @@ final case class BKV(k: Int, v: String)
   *   - single-reducer randomized blocks (`w ≤ τ`) get one seeded-random
   *     worker (`Setup.scala:157-160`).
   *
-  * Reducer ids `1..k` are shuffled once with `Random(seed)` and sliced
-  * contiguously per multi block (`Setup.scala:139-147`; seed 647 at
-  * `GenerateLabeledPoints.scala:71`).
+  * Reducer ids `1..k` are shuffled once with a `Random` seeded by [[Seed]]
+  * and sliced contiguously per multi block (`Setup.scala:139-147`).
   *
   * Scale note (100 TB): callers need not pass EVERY block — only blocks with
   * `w > τ` influence the plan. [[TrianglePipeline]] collects just those
@@ -32,6 +31,16 @@ final case class BKV(k: Int, v: String)
   * computed over the full workload, not the collected subset.
   */
 object DisDedupPlanner {
+
+  /** The planner's random seed — the reference's, fixed at
+    * `GenerateLabeledPoints.scala:71`. */
+  private[dedup] val Seed = 647L
+
+  /** τ = W/(3k·ln k): blocks with workload above it are planned, blocks at
+    * or below it go to one seeded-random reducer. k = 1 ⇒ +∞ (everything
+    * randomized). */
+  def tau(totalWork: Long, k: Int): Double =
+    if (k == 1) Double.PositiveInfinity else totalWork / (3.0 * k * math.log(k))
 
   /** Largest l with l(l+1)/2 ≤ ki (reference `Util.getL`, Util.scala:60-68). */
   def getL(ki: Int): Int = {
@@ -80,13 +89,12 @@ object DisDedupPlanner {
   def assign(
       stats: Seq[(BKV, Long)],
       k: Int,
-      seed: Long = 647L,
       totalWork: Option[Long] = None): Map[BKV, IndexedSeq[Int]] = {
     require(k >= 1, s"need at least one reducer, got $k")
     val work = stats.map { case (b, n) => (b, n * (n - 1) / 2) }
-    val w = totalWork.getOrElse(work.map(_._2).sum).toDouble
-    val multiThresh = w / k
-    val tau = w / (3.0 * k * math.log(k)) // k=1 ⇒ +Inf ⇒ everything randomized
+    val w = totalWork.getOrElse(work.map(_._2).sum)
+    val multiThresh = w.toDouble / k
+    val tau = DisDedupPlanner.tau(w, k)
 
     // Deterministic orders (the reference iterates hash maps — partition- and
     // runtime-dependent; the resulting PAIR SET is invariant, so we pick
@@ -99,7 +107,7 @@ object DisDedupPlanner {
     val singleRnd = work.filter(_._2 <= tau).sortBy { case (b, _) => (b.k, b.v) }
 
     val kis = multiWorkerCounts(multi, k)
-    val rand = new Random(seed)
+    val rand = new Random(Seed)
     val s = rand.shuffle((1 to k).toVector)
     var n = 0
     val out = Map.newBuilder[BKV, IndexedSeq[Int]]

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,12 +30,12 @@ import scala.util.hashing.MurmurHash3
   *      must exist because the plan says so. The shuffle carries ONLY
   *      (id, blocking-key values), never tuple payloads;
   *   5. the exactly-once guard (pair kept only in its lowest shared
-  *      ordinal's block, `Compare.scala:94,106`) and the feature projection
-  *      run AFTER the typed stages as codegen'd Column expressions — the
-  *      guard is the same scalar comparison chain the declarative plan
-  *      uses, and features come from [[DedupPipeline.featuresFor]]'s join
-  *      back to the source (broadcast for dimension-sized inputs, shuffle
-  *      join at scale).
+  *      ordinal's block, `Compare.scala:94,106`) runs in-line in that
+  *      reducer — the same first-agreeing-key-value rule the declarative
+  *      plan evaluates — and the feature projection runs AFTER the typed
+  *      stages as codegen'd Column expressions, from
+  *      [[DedupPipeline.featuresFor]]'s join back to the source (broadcast
+  *      for dimension-sized inputs, shuffle join at scale).
   *
   * Determinism: the reference draws the triangle anchor from a shared
   * `Random` whose draw order depends on partition iteration; we derive it
@@ -43,9 +43,9 @@ import scala.util.hashing.MurmurHash3
   * results are stable under re-planning. The emitted pair SET is identical.
   *
   * Output is pair-set-equal to [[DedupPipeline.pairFeatures]] — the same
-  * DuckDB oracle SQL validates both (the declarative plan for the common
-  * case, this pipeline when one block dominates the key distribution —
-  * see [[DedupStrategy]]).
+  * DuckDB oracle SQL validates both. This plan is not opt-in:
+  * [[DedupStrategy.pairFeaturesAuto]] picks it when one block dominates
+  * the key distribution, and the declarative plan otherwise.
   */
 object TrianglePipeline {
 
@@ -54,38 +54,24 @@ object TrianglePipeline {
   private val sideR = "R"
 
   /** Unoriented exactly-once pair ids: (id1, id2, bk). */
-  def pairs(df: DataFrame, cfg: DedupConfig, k: Int, seed: Long = 647L): DataFrame = {
+  def pairs(df: DataFrame, cfg: DedupConfig, k: Int): DataFrame = {
     val spark = df.sparkSession
-    val seedInt = seed.toInt
+    val seedInt = DisDedupPlanner.Seed.toInt
     val n = cfg.blockingKeys.size
     val idType = df.schema(cfg.idColumn).dataType
 
-    val keyCols = cfg.blockingKeys.zipWithIndex.map { case (c, i) =>
-      coalesce(trim(c.cast("string")), lit("")).as(s"bv$i")
-    }
-    val bkvArr = array((0 until n).map(i =>
-      struct(lit(i + 1).as("k"), col(s"bv$i").as("v"))): _*)
-
     // ---- D1: stats + plan (driver holds only heavy blocks) ----------------
-    val counts = df
-      .select(keyCols: _*)
-      .select(explode(bkvArr).as("bkv"))
-      .groupBy(col("bkv.k").as("k"), col("bkv.v").as("v"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("w", expr("n * (n - 1) DIV 2"))
-      .cache()
+    val counts = DedupPipeline.blockWork(df, cfg).cache()
     val totalWork = counts.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
-    val tau = if (k == 1) Double.PositiveInfinity
-              else totalWork / (3.0 * k * math.log(k))
     val heavy = counts
-      .filter(col("w") > tau)
+      .filter(col("w") > DisDedupPlanner.tau(totalWork, k))
       .select("k", "v", "n")
       .collect()
       .map(r => (BKV(r.getInt(0), r.getString(1)), r.getLong(2)))
       .toSeq
     counts.unpersist()
     val plan = DisDedupPlanner
-      .assign(heavy, k, seed, totalWork = Some(totalWork))
+      .assign(heavy, k, totalWork = Some(totalWork))
       .map { case (b, rids) => ((b.k, b.v), rids.toArray) }
     val bplan = spark.sparkContext.broadcast(plan)
 
@@ -100,7 +86,7 @@ object TrianglePipeline {
     // immune to that: k reducers exist because the PLAN says so, exactly as
     // in the reference.
     val kVal = k
-    val src = df.select(col(cfg.idColumn).as("id") +: keyCols: _*)
+    val src = df.select(col(cfg.idColumn).as("id") +: DedupPipeline.keyColumns(cfg): _*)
     // (rid, bk, bv) -> (side, id, bv0..bv(n-1))
     val routed = src.rdd.flatMap { row =>
       val id = row.get(0)
@@ -195,6 +181,6 @@ object TrianglePipeline {
 
   /** End-to-end: equivalent to [[DedupPipeline.pairFeatures]], different
     * physical strategy. */
-  def pairFeatures(df: DataFrame, cfg: DedupConfig, k: Int, seed: Long = 647L): DataFrame =
-    DedupPipeline.featuresFor(df, cfg, pairs(df, cfg, k, seed).select("id1", "id2"))
+  def pairFeatures(df: DataFrame, cfg: DedupConfig, k: Int): DataFrame =
+    DedupPipeline.featuresFor(df, cfg, pairs(df, cfg, k).select("id1", "id2"))
 }

@@ -233,15 +233,19 @@ object NearDup {
     * signature table — split out so a split of a standing sig table (the
     * q265 gate) can feed the generator without re-signing text. */
   private[graft] def lshPairsFromSig(sigs: DataFrame,
-      cfg: MinHashConfig = DefaultMinHash): DataFrame = {
+      cfg: MinHashConfig = DefaultMinHash): DataFrame =
+    withJaccards(bandPairs(sigs, cfg), sigs, cfg)
+
+  /** (id1 < id2, n_shared_bands): every doc pair sharing at least one LSH
+    * band bucket of the signature table, once, with its shared-band count. */
+  private def bandPairs(sigs: DataFrame, cfg: MinHashConfig): DataFrame = {
     val bands = bandsFrame(sigs, cfg)
-    val pairs = bands.alias("a")
+    bands.alias("a")
       .join(bands.alias("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .agg(count(lit(1)).as("n_shared_bands"))
-    withJaccards(pairs, sigs, cfg)
   }
 
   val q27LshPairsSql: String = s"""
@@ -1146,14 +1150,7 @@ object NearDup {
     val cfg = DefaultMinHash
     val sigs = graft.CachedFrames.track(sigFrame(
       Tables.parallelized(Tables(spark, sfDir, "documents")), cfg))
-    val bands = bandsFrame(sigs, cfg)
-    val pairs = bands.alias("a")
-      .join(bands.alias("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    pairs
+    bandPairs(sigs, cfg)
       .join(sigs.select(col("doc_id"), col("sig").as("sig1"),
         col("shingles").as("sh1")), col("id1") === col("doc_id")).drop("doc_id")
       .join(sigs.select(col("doc_id"), col("sig").as("sig2"),

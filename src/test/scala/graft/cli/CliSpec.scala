@@ -714,6 +714,51 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     assert(preds.exists(_ == 1.0), "no predicted duplicates at all")
   }
 
+  test("generate: --reducers sets only k — same pair file with and without " +
+    "it on a planted hot block, and bad values are still rejected") {
+    spark // force shared session so the CLI's getOrCreate reuses it
+    val dir = Files.createTempDirectory("graft-cli-gen")
+    // Febrl-style records in families of three (rec-<f>-org, rec-<f>-dup-<d>);
+    // 60% have a missing state, so the "" state block carries ~73% of the work
+    val states = Seq("nsw", "vic", "qld", "wa")
+    val names = Seq("alice", "bob", "carol", "dave", "erin", "frank", "grace")
+    val rows = (0 until 120).map { i =>
+      val id = s"rec-${i / 3}-" + (if (i % 3 == 0) "org" else s"dup-${i % 3}")
+      val state = if (i % 5 < 3) "" else states(i % 4)
+      Seq(id, names(i % 7), names((i / 3) % 7) + "son", s"${i % 40}",
+        s"${i / 3} main st", "", "suburb" + (i % 9), s"${2000 + i % 50}",
+        state, s"${19500101 + i}", s"${20 + i % 60}", s"0${400000000 + i}",
+        s"${1000000 + i / 3}", s"${(i * 7) % 10}").mkString(",")
+    }
+    val csv = dir.resolve("records.csv")
+    Files.write(csv, (graft.ml.Febrl.columns.mkString(",") +: rows).mkString("\n").getBytes)
+    val recs = graft.ml.Febrl.read(spark, csv.toString)
+    assert(graft.dedup.DedupStrategy.maxBlockShare(recs, graft.ml.Febrl.config) > 0.5,
+      "the fixture must put the chooser on the triangle plan")
+
+    def generate(out: String, extra: String*): Seq[String] = {
+      GenerateLabeledPoints.main(Array("--input", csv.toString,
+        "--output", dir.resolve(out).toString) ++ extra)
+      spark.read.textFile(dir.resolve(out).toString).collect().toSeq.sorted
+    }
+    val byDefault = generate("default")
+    val withK = generate("k3", "--reducers", "3")
+    // exactly-once oracle: record pairs sharing a blocking number or a state
+    val keys = rows.map(_.split(",", -1)).map(t => (t(13), t(8)))
+    val expected = (for (i <- keys.indices; j <- i + 1 until keys.size
+      if keys(i)._1 == keys(j)._1 || keys(i)._2 == keys(j)._2) yield 1).size
+    assert(byDefault.size === expected)
+    assert(withK === byDefault)
+
+    for (bad <- Seq("0", "x")) {
+      val e = intercept[IllegalArgumentException] {
+        GenerateLabeledPoints.main(Array("--input", csv.toString,
+          "--output", dir.resolve(s"bad-$bad").toString, "--reducers", bad))
+      }
+      assert(e.getMessage.contains("--reducers must be"), e.getMessage)
+    }
+  }
+
   test("profile-corpus job writes the q105 stats for an arbitrary parquet input, --approx switches face") {
     import org.apache.spark.sql.functions.col
     spark // force shared session so the CLI's getOrCreate reuses it

@@ -60,6 +60,25 @@ class DisDedupPlannerSpec extends AnyFunSuite {
     assert(plan.values.forall(_ == Vector(1)))
   }
 
+  test("assign: planning only the blocks above tau, given the full W, routes them as planning all blocks does") {
+    // the rule TrianglePipeline's heavy-only collect relies on
+    val rnd = new scala.util.Random(11)
+    for (trial <- 1 to 40) {
+      val stats = (1 to 2 + rnd.nextInt(60)).map { i =>
+        BKV(1 + rnd.nextInt(3), s"b$i") ->
+          (if (rnd.nextInt(8) == 0) 50L + rnd.nextInt(400) else 1L + rnd.nextInt(12))
+      }
+      val k = 1 + rnd.nextInt(64)
+      val totalWork = stats.map { case (_, n) => n * (n - 1) / 2 }.sum
+      val tau = DisDedupPlanner.tau(totalWork, k)
+      val heavy = stats.filter { case (_, n) => n * (n - 1) / 2 > tau }
+      val full = DisDedupPlanner.assign(stats, k)
+      val heavyOnly = DisDedupPlanner.assign(heavy, k, totalWork = Some(totalWork))
+      assert(heavyOnly === full.filter { case (b, _) => heavy.exists(_._1 == b) },
+        s"trial $trial: k=$k, ${heavy.size} of ${stats.size} blocks above tau")
+    }
+  }
+
   test("golden: k=49 on the reference Febrl train set reproduces the README worker counts") {
     // Block sizes computed from /root/reference/data/train.csv with the
     // reference's blocking functions (Util.scala:45-58): ordinal 1 =
@@ -74,7 +93,7 @@ class DisDedupPlannerSpec extends AnyFunSuite {
       .groupBy(identity)
       .map { case (b, xs) => (b, xs.size.toLong) }
       .toSeq
-    val plan = DisDedupPlanner.assign(stats, 49, seed = 647L)
+    val plan = DisDedupPlanner.assign(stats, 49)
     val multiCounts = plan.collect { case (b, rids) if rids.size > 1 || expectedMulti.contains(b) => (b, rids.size) }
     assert(expectedMulti.toSet.subsetOf(multiCounts.toSet),
       s"got ${multiCounts.toSeq.sortBy(b => (b._1.k, b._1.v))}")
