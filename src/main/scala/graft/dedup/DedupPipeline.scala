@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,29 +15,14 @@ import org.apache.spark.sql.functions._
   * This file holds the block model every physical plan shares — the
   * normalised key value, the (k, v) explode, the per-block workload — and
   * the declarative formulation: an inverted-index self-join that Catalyst
-  * plans with whole-stage codegen, partial aggregation and AQE skew
-  * handling. At 100 TB this is the standard scalable candidate-generation
-  * shape: the shuffle keys are (k, v) for the join and (id1, id2) for the
-  * exactly-once dedup, both well-distributed unless one block dominates — in
-  * which case [[DedupStrategy]] picks [[TrianglePipeline]] (the reference's
-  * skew-aware physical strategy) instead.
+  * plans with whole-stage codegen and AQE skew handling. LSH bands and
+  * SimHash tables ([[graft.ops.NearDup]]) are blocking functions too:
+  * [[blockJoin]] emits their pairs once, in the lowest shared band or table.
+  * At 100 TB the one shuffle key, (k, v), is well-distributed unless one
+  * block dominates — in which case [[DedupStrategy]] picks
+  * [[TrianglePipeline]] (the reference's skew-aware strategy) instead.
   */
 object DedupPipeline {
-
-  /** Right-size a narrow input before the expanding block self-join.
-    *
-    * The join's OUTPUT is quadratic in block sizes, so its cost must be
-    * spread across every core even when the INPUT is one small parquet file
-    * (local test scales) or a handful of partitions — otherwise Spark
-    * happily broadcast-joins the tiny index and evaluates millions of
-    * comparator rows in a single task. When the input already has ≥
-    * defaultParallelism partitions (any real cluster scale) this is a no-op,
-    * so no extra shuffle is ever paid at 100 TB.
-    */
-  private[dedup] def parallelize(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-  }
 
   /** A tuple's block key value under one blocking function.
     * Reference: `Util.getBKVs` (Util.scala:45-58) — null key value ⇒ "". */
@@ -47,11 +33,12 @@ object DedupPipeline {
   private[dedup] def keyColumns(cfg: DedupConfig): Seq[Column] =
     cfg.blockingKeys.zipWithIndex.map { case (c, i) => keyValue(c).as(s"bv$i") }
 
-  /** One `bkv` struct (k = 1-based ordinal, v = key value) per blocking
-    * function, exploded from the `bv$i` columns. */
-  private def explodeKeys(cfg: DedupConfig): Column =
-    explode(array(cfg.blockingKeys.indices.map(i =>
-      struct(lit(i + 1).as("k"), col(s"bv$i").as("v"))): _*)).as("bkv")
+  /** One `bkv` struct per blocking function — ordinal `k` (1-based) and key
+    * value `v`, under the given field names — exploded from the `bv$i`
+    * columns. */
+  private def explodeKeys(m: Int, k: String = "k", v: String = "v"): Column =
+    explode(array((0 until m).map(i =>
+      struct(lit(i + 1).as(k), col(s"bv$i").as(v))): _*)).as("bkv")
 
   /** n(n−1)/2 over a block's tuple-count column `n`: the pairs the block
     * compares, its Dis-Dedup workload. */
@@ -60,14 +47,16 @@ object DedupPipeline {
   /** (k, v, n, w): every block's tuple count `n` and workload `w`. */
   private[dedup] def blockWork(df: DataFrame, cfg: DedupConfig): DataFrame =
     df.select(keyColumns(cfg): _*)
-      .select(explodeKeys(cfg))
+      .select(explodeKeys(cfg.blockingKeys.size))
       .groupBy(col("bkv.k").as("k"), col("bkv.v").as("v"))
       .agg(count(lit(1)).as("n"))
       .withColumn("w", blockPairs)
 
-  /** The exactly-once block self-join: index rows `a` and `b` (aliases)
-    * carrying `id`, `k`, the `bv$i` key values and `carry`, one row per pair
-    * (a.id < b.id) in its lowest shared block only.
+  /** The exactly-once block self-join: rows `a` and `b` (aliases) carrying
+    * `id`, the key values `bv$i` (`keys(i)`: one value type per call, null
+    * never matches), `carry` and the ordinal/value columns named by `kv`,
+    * one row per pair (a.id < b.id) in its lowest shared block only. The
+    * caller right-sizes a scan-fed `df` ([[graft.Tables.parallelized]]).
     *
     * Exactly-once uses the reference's own guard (`Compare.scala:94,106` +
     * `Util.lowestCommonBlockNum`) rather than a groupBy(id1, id2)
@@ -82,31 +71,39 @@ object DedupPipeline {
     *
     * Shape at scale: ONE shuffle on (k, v) for the self-join (AQE splits
     * skewed blocks); the guard is O(#blockingFns) codegen'd comparisons
-    * per candidate.
+    * per candidate, evaluated in the join condition.
     */
-  private def blockJoin(df: DataFrame, cfg: DedupConfig, carry: Seq[String]): DataFrame = {
-    val idx = parallelize(df)
-      .select(col(cfg.idColumn).as("id") +: (keyColumns(cfg) ++ carry.map(col)): _*)
-      .select(col("*"), explodeKeys(cfg))
-      .select(col("*"), col("bkv.k").as("k"), col("bkv.v").as("v"))
+  private[graft] def blockJoin(df: DataFrame, id: Column, keys: Seq[Column],
+      carry: Seq[Column], kv: (String, String) = ("k", "v")): DataFrame = {
+    val (k, v) = kv
+    val idx = df
+      .select(id.as("id") +: (keys.zipWithIndex.map { case (c, i) => c.as(s"bv$i") } ++
+        carry): _*)
+      .select(col("*"), explodeKeys(keys.size, k, v))
+      .select(col("*"), col(s"bkv.$k").as(k), col(s"bkv.$v").as(v))
       .drop("bkv")
     val a = idx.alias("a")
     val b = idx.alias("b")
     // lowest shared ordinal: first i (1-based) whose key values agree
-    val lcb = cfg.blockingKeys.indices.foldRight(lit(Int.MaxValue)) { case (i, rest) =>
+    val lcb = keys.indices.foldRight(lit(Int.MaxValue)) { case (i, rest) =>
       when(col(s"a.bv$i") === col(s"b.bv$i"), lit(i + 1)).otherwise(rest)
     }
     a.join(b,
-        col("a.k") === col("b.k") && col("a.v") === col("b.v") &&
-          col("a.id") < col("b.id"))
-      .filter(col("a.k") === lcb)
+      col(s"a.$k") === col(s"b.$k") && col(s"a.$v") === col(s"b.$v") &&
+        col(s"a.$k") === lcb && col("a.id") < col("b.id"))
   }
+
+  /** Σᵢ [a.bvᵢ = b.bvᵢ] over a [[blockJoin]] row's `m` key values: the
+    * number of blocks the pair shares (bigint). */
+  private[graft] def sharedKeys(m: Int): Column =
+    (0 until m).map(i =>
+      when(col(s"a.bv$i") === col(s"b.bv$i"), lit(1L)).otherwise(lit(0L))).reduce(_ + _)
 
   /** Candidate pairs (id1 < id2) sharing at least one blocking key, tagged
     * with the lowest shared ordinal `bk` — each pair EXACTLY ONCE even when
     * it co-occurs in blocks of several blocking functions. */
   def candidatePairs(df: DataFrame, cfg: DedupConfig): DataFrame =
-    blockJoin(df, cfg, Nil)
+    blockJoin(Tables.parallelized(df), col(cfg.idColumn), keyColumns(cfg), Nil)
       .select(col("a.id").as("id1"), col("b.id").as("id2"), col("a.k").as("bk"))
 
   /** Label (if configured) + similarity features of a pair whose two
@@ -136,7 +133,8 @@ object DedupPipeline {
     * wider payload in the one block shuffle.
     */
   def pairFeatures(df: DataFrame, cfg: DedupConfig): DataFrame =
-    blockJoin(df, cfg, cfg.features.map(_.column).distinct)
+    blockJoin(Tables.parallelized(df), col(cfg.idColumn), keyColumns(cfg),
+        cfg.features.map(_.column).distinct.map(col))
       .select(Seq(col("a.id").as("id1"), col("b.id").as("id2")) ++
         pairColumns(cfg, "a", "b", "id"): _*)
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.dedup.DedupPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,8 +66,6 @@ object NearDup {
     * affine rehash with odd multiplier, max operand < 2^62 so the checked
     * BIGINT arithmetic in both engines never overflows. 16× fewer md5 calls
     * than hashing (seed, shingle) pairs. */
-  private val Mod56 = "72057594037927936" // 2^56
-
   private def withSignature(df: DataFrame, cfg: MinHashConfig): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     // native codegen signature (graft.functions.MinHashAffine): one
@@ -149,20 +148,20 @@ object NearDup {
     withSignature(shingled(docs), cfg)
       .select(col("doc_id"), col("sig"), col("shingles"))
 
+  /** A signature's LSH band keys: band b's key is the md5 of its '_'-joined
+    * `rowsPerBand` minhashes. */
+  private def bandKeys(cfg: MinHashConfig): Seq[org.apache.spark.sql.Column] =
+    (0 until cfg.numBands).map(b => md5(array_join(
+      transform(slice(col("sig"), b * cfg.rowsPerBand + 1, cfg.rowsPerBand),
+        _.cast("string")), "_")))
+
   /** The index's band-posting table from a signature table: (doc_id,
     * band, bkey) — the equi-join key space of the candidate generator. */
   private[graft] def bandsFrame(sigs: DataFrame,
-      cfg: MinHashConfig = DefaultMinHash): DataFrame = {
-    import cfg.{numBands, rowsPerBand}
-    sigs.select(
-      col("doc_id"),
-      explode(expr(
-        s"""transform(sequence(0, ${numBands - 1}), b -> struct(b AS band,
-           |  md5(array_join(transform(slice(sig, b*$rowsPerBand + 1, $rowsPerBand),
-           |                           x -> CAST(x AS STRING)), '_')) AS bkey))""".stripMargin))
-        .as("bb"))
+      cfg: MinHashConfig = DefaultMinHash): DataFrame =
+    sigs.select(col("doc_id"), explode(array(bandKeys(cfg).zipWithIndex.map {
+        case (key, b) => struct(lit(b).as("band"), key.as("bkey")) }: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-  }
 
   /** The candidate columns (est/true Jaccard) joined onto a pair list from
     * a signature table — shared by the from-scratch generator and the
@@ -236,17 +235,17 @@ object NearDup {
       cfg: MinHashConfig = DefaultMinHash): DataFrame =
     withJaccards(bandPairs(sigs, cfg), sigs, cfg)
 
-  /** (id1 < id2, n_shared_bands): every doc pair sharing at least one LSH
-    * band bucket of the signature table, once, with its shared-band count. */
-  private def bandPairs(sigs: DataFrame, cfg: MinHashConfig): DataFrame = {
-    val bands = bandsFrame(sigs, cfg)
-    bands.alias("a")
-      .join(bands.alias("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+  /** (id1 < id2, n_shared_bands): every doc pair sharing an LSH band
+    * bucket. Bands are blocking functions of [[DedupPipeline.blockJoin]],
+    * so each pair is emitted once, in its lowest shared band. The join
+    * carries every band key, as the raw 16-byte digest rather than its hex
+    * text: half the bytes per key keeps the band rows small enough to
+    * broadcast at the sizes where the slim (doc_id, band, bkey) rows were. */
+  private def bandPairs(sigs: DataFrame, cfg: MinHashConfig): DataFrame =
+    DedupPipeline.blockJoin(sigs, col("doc_id"), bandKeys(cfg).map(unhex), Nil,
+        ("band", "bkey"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"),
+        DedupPipeline.sharedKeys(cfg.numBands).as("n_shared_bands"))
 
   val q27LshPairsSql: String = s"""
     WITH ${lshCandidateSqlCtes("documents")}
@@ -376,17 +375,11 @@ object NearDup {
     * guarantee, wider prefixes ⇒ smaller buckets). */
   private val SimHashBits = 56
 
-  /** SimHash near-dup pairs via rotation banding: explode each fingerprint
-    * into (table, bucket) keys, equi-join, dedup pairs found by several
-    * tables, Hamming-score once. Same sub-quadratic join shape as MinHash
-    * LSH banding. */
-  /** Rotation-banded (t, bucket) keys for a (doc_id, simhash) frame —
-    * rotation r moves block r to the top: rot = (x mod 2^(56-k))·2^k +
-    * (x div 2^(56-k)), k = r·prefixBits; all operands < 2^56 so BIGINT
-    * arithmetic never overflows. Shared by q37 batch pairing and the
-    * incremental batch-vs-corpus probe (q71). */
-  /** Table r's rotated-prefix bucket for a simhash column — the one
-    * formula behind [[simhashBandsOn]] and the streaming admission probe
+  /** Table r's rotated-prefix bucket for a simhash column — rotation r
+    * moves block r to the top: rot = (x mod 2^(56-k))·2^k + (x div
+    * 2^(56-k)), k = r·prefixBits; all operands < 2^56 so BIGINT arithmetic
+    * never overflows. The one formula behind q37's pair join,
+    * [[simhashBandsOn]] and the streaming admission probe
     * ([[graft.streaming.EventStreams.admissionStream]]), which needs the
     * per-table buckets as scalar columns (no explode: its stream side
     * stays one row per document through stateless static-index joins). */
@@ -399,6 +392,8 @@ object NearDup {
     shiftright(rot, SimHashBits - cfg.prefixBits)
   }
 
+  /** (doc_id, simhash, t, bucket) rows, one per table: the batch-vs-corpus
+    * admission probes' side of the rotation banding. */
   private[graft] def simhashBandsOn(sims: DataFrame,
       cfg: SimHashConfig = DefaultSimHash): DataFrame = {
     import cfg.tables
@@ -413,19 +408,19 @@ object NearDup {
         col("tb.t").as("t"), col("tb.bucket").as("bucket"))
   }
 
+  /** SimHash near-dup pairs: the rotation tables are blocking functions of
+    * [[DedupPipeline.blockJoin]], so each pair is emitted once, in its
+    * lowest shared table; its Hamming distance is the same in every table. */
   def q37SimhashPairs(spark: SparkSession, sfDir: String,
       cfg: SimHashConfig = DefaultSimHash): DataFrame = {
     val sims = graft.CachedFrames.track(q28Simhash(spark, sfDir)
       .select(col("doc_id"), col("simhash")))
-    val bands = simhashBandsOn(sims, cfg)
-    bands.alias("a")
-      .join(bands.alias("b"),
-        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("h"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_tables"), min(col("h")).as("hamming"))
+    DedupPipeline.blockJoin(sims, col("doc_id"),
+        (0 until cfg.tables).map(r => rotBucket(col("simhash"), r, cfg)),
+        Seq(col("simhash")), ("t", "bucket"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"),
+        DedupPipeline.sharedKeys(cfg.tables).as("n_tables"),
+        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
   }
 
   /** DuckDB text for the rotation-band UNION over a (doc_id, simhash)

@@ -116,11 +116,23 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(nodes(p, "SortMergeJoin") == 0, p)
     // band join + two signature join-backs for the verify projection
     assert(nodes(p, "BroadcastHashJoin") == 3, p)
-    // pair counting aggregates map-side before its one shuffle
-    assert(p.contains("partial_count"), p)
-    // that pair-count shuffle + the cached signature frame's scan
-    // right-sizing (Tables.parallelized, inert at cluster scale)
-    assert(nodes(p, "Exchange") == 2, p)
+    // each pair leaves the band join once, in its lowest shared band, with
+    // its shared-band count summed in-row: no pair aggregate, and the only
+    // shuffle is the cached signature frame's scan right-sizing
+    // (Tables.parallelized, inert at cluster scale)
+    assert(nodes(p, "HashAggregate") == 0, p)
+    assert(nodes(p, "Exchange") == 1, p)
+  }
+
+  test("q37_simhash_pairs: rotation-table equi-join, each pair once, no " +
+      "pair aggregate") {
+    val p = finalPlan("q37_simhash_pairs")
+    // the table join is a HASH equi-join on (t, bucket); the lowest shared
+    // table guard replaces the groupBy(id1, id2) pair count
+    assert("HashJoin \\[t#\\d+, bucket#".r.findFirstIn(p).isDefined, p)
+    assert(nodes(p, "HashAggregate") == 0, p)
+    assert(nodes(p, "CartesianProduct") == 0, p)
+    assert(nodes(p, "BroadcastNestedLoopJoin") == 0, p)
   }
 
   test("q53_span_dedup: spans shuffle once for exact dedup, survivors anti-join broadcast") {
@@ -646,7 +658,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   test("dedup_pairs: one exchange before the feature projection, each comparator once") {
     val p = finalPlan("dedup_pairs")
-    // the only shuffle is parallelize()'s input right-sizing (reused by the
+    // the only shuffle is Tables.parallelized's input right-sizing (reused by the
     // self-join's other side); the block join itself must not add one here
     assert(nodes(p, "Exchange") == 1, p)
     assert(nodes(p, "ReusedExchange") == 1, p)

@@ -695,7 +695,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     spark // force shared session so the CLI's getOrCreate reuses it
     val dir = Files.createTempDirectory("graft-cli").toString
     GenerateLabeledPoints.main(Array(
-      "--input", "/root/reference/data/test.csv",
+      "--input", graft.ReferenceFixtures.csv("test.csv"),
       "--output", s"$dir/pairs", "--reducers", "8"))
     TrainDupClassifier.main(Array(
       "--input", s"$dir/pairs", "--model", s"$dir/model", "--maxIter", "5"))
@@ -907,7 +907,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     spark
     val dir = Files.createTempDirectory("graft-pickb").toString
     PickBlocking.main(Array(
-      "--input", "/root/reference/data/test.csv", "--output", s"$dir/sb"))
+      "--input", graft.ReferenceFixtures.csv("test.csv"), "--output", s"$dir/sb"))
     val rows = spark.read.parquet(s"$dir/sb").collect()
       .map(r => r.getString(0) -> r).toMap
     assert(rows.size === 5)
@@ -920,7 +920,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       "the default 150k budget")
     // a tight budget flips the winner to the best scheme that fits
     PickBlocking.main(Array(
-      "--input", "/root/reference/data/test.csv", "--output", s"$dir/sb2",
+      "--input", graft.ReferenceFixtures.csv("test.csv"), "--output", s"$dir/sb2",
       "--budget", "2000"))
     val w2 = spark.read.parquet(s"$dir/sb2")
       .filter(org.apache.spark.sql.functions.col("is_winner"))

@@ -6,7 +6,7 @@ import graft.SparkSpec
 import graft.ml.Febrl
 
 /** Golden test of the measured blocking-key planner on the reference's own
-  * Febrl data (/root/reference/data/test.csv, 1,000 records, 779 true
+  * Febrl data (its test.csv via [[graft.ReferenceFixtures]], 1,000 records, 779 true
   * duplicate pairs): the planner's scoreboard reproduces hand-computed
   * Christen metrics exactly, and at a realistic budget it SELECTS the
   * reference's own scheme (blocking_number + state, Util.scala:45-58) —
@@ -15,7 +15,7 @@ import graft.ml.Febrl
   * config.copy), so dedup_pairs parity is unaffected. */
 class BlockingPlannerSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val recs = Febrl.read(spark, "/root/reference/data/test.csv")
+  private lazy val recs = Febrl.read(spark, graft.ReferenceFixtures.csv("test.csv"))
 
   private lazy val truth = {
     val ids = recs.select(col("rec_id"),

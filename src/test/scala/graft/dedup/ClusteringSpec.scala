@@ -90,7 +90,7 @@ class ClusteringSpec extends AnyFunSuite with SparkSpec {
   test("local and iterative strategies agree on the Febrl ground-truth graph") {
     import spark.implicits._
     val pairs = DedupPipeline
-      .pairFeatures(Febrl.read(spark, "/root/reference/data/test.csv"), Febrl.config)
+      .pairFeatures(Febrl.read(spark, graft.ReferenceFixtures.csv("test.csv")), Febrl.config)
       .filter(col("label") === 1.0)
       .select(col("id1"), col("id2"))
       .cache()
@@ -104,7 +104,7 @@ class ClusteringSpec extends AnyFunSuite with SparkSpec {
 
   test("Febrl ground-truth pairs cluster into exactly the record families") {
     val pairs = DedupPipeline
-      .pairFeatures(Febrl.read(spark, "/root/reference/data/test.csv"), Febrl.config)
+      .pairFeatures(Febrl.read(spark, graft.ReferenceFixtures.csv("test.csv")), Febrl.config)
       .filter(col("label") === 1.0)
       .select(col("id1"), col("id2"))
       .cache()

@@ -16,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *       in plain Scala,
   *   (d) the triangle physical variant emits the identical pair set for
   *       random reducer counts k,
-  *   (e) `candidatePairs` tags each pair with its lowest shared ordinal.
+  *   (e) `candidatePairs` tags each pair with its lowest shared ordinal,
+  *   (f) the generic `blockJoin` over 4 `long` keys (the shape of LSH
+  *       bands and SimHash tables) emits the oracle set exactly once, in
+  *       its lowest agreeing ordinal, and `sharedKeys` equals the pair
+  *       count of the plain unguarded join.
   */
 class DedupPropertySpec extends AnyFunSuite with SparkSpec {
 
@@ -96,6 +100,71 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
         Prop(candExact) :| "candidatePairs emits duplicates",
         Prop(candMatch) :| s"candidatePairs set mismatch (${candRows.length} vs ${expected.size})",
         Prop(candBk) :| "candidatePairs bk is not the lowest shared ordinal")
+    }
+    val res = ScTest.check(
+      ScTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  private val nKeys = 4
+
+  /** Rows of 4 nullable `long` keys drawn from a few family bases: each key
+    * is kept (most often), redrawn or nulled, so pairs share 0–4 keys,
+    * exact copies are common and null values (which never match) occur. */
+  private val longKeysGen: Gen[List[Seq[Option[Long]]]] = for {
+    bases <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.listOfN(nKeys, Gen.choose(0L, 3L))))
+    n <- Gen.choose(0, 60)
+    rows <- Gen.listOfN(n, Gen.oneOf(bases).flatMap(base =>
+      Gen.sequence[List[Option[Long]], Option[Long]](base.map(v => Gen.frequency(
+        (6, Gen.const(Some(v))),
+        (2, Gen.choose(0L, 3L).map(Some(_))),
+        (1, Gen.const(None)))))))
+  } yield rows
+
+  test("blockJoin over long keys: exactly once, lowest agreeing ordinal, " +
+    "sharedKeys = unguarded pair count") {
+    val longSchema = StructType(StructField("id", LongType, nullable = false) +:
+      (0 until nKeys).map(i => StructField(s"k$i", LongType, nullable = true)))
+    val prop = Prop.forAllNoShrink(longKeysGen) { rows =>
+      import spark.implicits._
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.zipWithIndex.map { case (ks, id) => Row(id.toLong +: ks.map(_.getOrElse(null)): _*) }, 4),
+        longSchema)
+      val keys = (0 until nKeys).map(i => col(s"k$i"))
+
+      // oracle: agreeing ordinals (1-based) per pair, nulls never agree
+      val expected = (for {
+        (a, i) <- rows.zipWithIndex; (b, j) <- rows.zipWithIndex if i < j
+        agree = a.zip(b).zipWithIndex.collect {
+          case ((Some(x), Some(y)), o) if x == y => o + 1 }
+        if agree.nonEmpty
+      } yield (i.toLong, j.toLong) -> (agree.min, agree.size.toLong)).toMap
+
+      val got = DedupPipeline.blockJoin(df, col("id"), keys, Nil)
+        .select(col("a.id"), col("b.id"), col("a.k"),
+          DedupPipeline.sharedKeys(nKeys))
+        .as[(Long, Long, Int, Long)].collect()
+      val gotPairs = got.map { case (a, b, _, _) => (a, b) }
+
+      val idx = df.select(col("id"), explode(array((0 until nKeys).map(i =>
+        struct(lit(i).as("t"), col(s"k$i").as("v"))): _*)).as("e"))
+        .select(col("id"), col("e.t").as("t"), col("e.v").as("v"))
+      val unguarded = idx.alias("a").join(idx.alias("b"),
+          col("a.t") === col("b.t") && col("a.v") === col("b.v") &&
+            col("a.id") < col("b.id"))
+        .groupBy(col("a.id"), col("b.id")).count()
+        .as[(Long, Long, Long)].collect()
+        .map { case (a, b, n) => (a, b) -> n }.toMap
+
+      Prop.all(
+        Prop(gotPairs.length == gotPairs.toSet.size) :| "blockJoin emits duplicates",
+        Prop(gotPairs.toSet == expected.keySet) :|
+          s"blockJoin set mismatch (${got.length} vs ${expected.size})",
+        Prop(got.forall { case (a, b, k, _) => expected.get((a, b)).map(_._1).contains(k) }) :|
+          "k is not the lowest agreeing ordinal",
+        Prop(unguarded.keySet == expected.keySet) :| "unguarded join set mismatch",
+        Prop(got.forall { case (a, b, _, n) => unguarded.get((a, b)).contains(n) }) :|
+          "sharedKeys differs from the unguarded pair count")
     }
     val res = ScTest.check(
       ScTest.Parameters.default.withMinSuccessfulTests(15), prop)

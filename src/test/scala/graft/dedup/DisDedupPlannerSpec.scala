@@ -80,11 +80,11 @@ class DisDedupPlannerSpec extends AnyFunSuite {
   }
 
   test("golden: k=49 on the reference Febrl train set reproduces the README worker counts") {
-    // Block sizes computed from /root/reference/data/train.csv with the
+    // Block sizes computed from the reference train.csv with the
     // reference's blocking functions (Util.scala:45-58): ordinal 1 =
     // blocking_number (col 13), ordinal 2 = state (col 8); README.md:210-227
     // lists the resulting multi-block worker assignment for --reducers 49.
-    val lines = scala.io.Source.fromFile("/root/reference/data/train.csv").getLines().drop(1).toSeq
+    val lines = scala.io.Source.fromFile(graft.ReferenceFixtures.csv("train.csv")).getLines().drop(1).toSeq
     val stats = lines
       .flatMap { line =>
         val t = line.split(",")

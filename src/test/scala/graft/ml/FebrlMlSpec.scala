@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end reference parity on the original Febrl test fixture
-  * (/root/reference/data/test.csv, 1,000 records):
+  * (test.csv via [[graft.ReferenceFixtures]], 1,000 records):
   *
   *   - the blocking + exactly-once pair pipeline must produce EXACTLY the
   *     reference's pair count — the published test confusion matrix sums to
@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FebrlMlSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val pairs = {
-    val df = Febrl.read(spark, "/root/reference/data/test.csv")
+    val df = Febrl.read(spark, graft.ReferenceFixtures.csv("test.csv"))
     DedupPipeline.pairFeatures(df, Febrl.config).cache()
   }
 
